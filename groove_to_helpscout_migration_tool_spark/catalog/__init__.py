@@ -159,12 +159,6 @@ _CHANGED = {
     # SF (more probed cells => different candidate sets).
     "llm_ann_ivf_topk": 11,
     "llm_ann_ivf_kmeans_topk": 11,
-    # round 12: paginated_source's fetch task gained the in-task retry
-    # wrapper (every attempt re-acquires a bucket token; retry_attempts
-    # defaults to 1 so this query's values are identical by
-    # construction) -- but the mapInPandas closure bytes changed, so the
-    # sweep must re-certify the one catalog query that routes through it
-    "ref_s1_http_fixture_scan": 12,
     # round 13: sq8_topk's pool cut and final rank moved from
     # row_number().over(partitionBy("qid")) -- a corpus-wide window
     # hash-exchanged into exactly Q partitions, the r12 weak grade -- to
@@ -234,6 +228,15 @@ _CHANGED = {
     "llm_segment_dedup": 13,
     "llm_segment_dedup_keep_first": 13,
     "llm_boilerplate_strip": 13,
+    # round 15: the fetch retries moved from a with_retries wrapper
+    # around client.fetch_page into paginated_source(retry_attempts=3),
+    # so every attempt takes a token; sources/api.py now builds one
+    # governed call per task. Same cassette, same records, so values are
+    # identical by construction, but the closure bytes changed.
+    "ref_s1_http_fixture_scan": 15,
+    # round 15: pyds's batch and streaming readers share one page-rows
+    # loop (code moved, values identical by construction)
+    "ref_s1_python_datasource": 15,
 }
 
 # Queries measured >= 2s in the full sf0.01 oracle sweep (Spark + DuckDB

@@ -1429,9 +1429,9 @@ FROM range(0, 123) t(i)
         "S1 paginated scan driven through the HTTP-shaped seam"
         " (sources/http_fixture.py): a VCR-style cassette scripts 429/500"
         " prefixes on two pages, the metadata probe supplies total_count"
-        " (S3, APIHelper.php:41-105), and the executor-side retry wrapper"
-        " (sources/retry.py) recovers inside the task that owns the page --"
-        " the full production fetch path minus the socket."
+        " (S3, APIHelper.php:41-105), and paginated_source's in-task retries"
+        " recover inside the task that owns the page, each attempt taking a"
+        " token -- the full production fetch path minus the socket."
     ),
 )
 def ref_s1_http_fixture_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1441,7 +1441,6 @@ def ref_s1_http_fixture_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         RecordedTransport,
         paged_script,
     )
-    from ..sources.retry import with_retries
 
     records = [{"rec_id": i, "payload": f"ticket-{i}"} for i in range(123)]
     script = paged_script(records, per_page=20, flaky={3: [429, 500], 6: [503]})
@@ -1452,14 +1451,15 @@ def ref_s1_http_fixture_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("payload", T.StringType()),
         ]
     )
-    fetch = with_retries(client.fetch_page, max_attempts=3, backoff_base=0.0)
     return paginated_source(
         spark,
-        fetch,
+        client.fetch_page,
         total_count=client.probe_total(),
         schema=schema,
         per_page=20,
         requests_per_minute=600,
+        retry_attempts=3,
+        retry_backoff=0.0,
     )
 
 

@@ -4,15 +4,10 @@ plans/ assemble."""
 
 from .cache import persist_artifact, unpersist_artifacts
 from .errors import (
-    ERROR_SCHEMA,
-    with_error,
-    split_errors,
     group_error_report,
     write_error_csv,
 )
 from .joins import (
-    broadcast_lookup,
-    lookup_with_default,
     validation_anti_join,
     dedup_anti_join,
     run_validations,
@@ -22,13 +17,8 @@ from .joins import (
 __all__ = [
     "persist_artifact",
     "unpersist_artifacts",
-    "ERROR_SCHEMA",
-    "with_error",
-    "split_errors",
     "group_error_report",
     "write_error_csv",
-    "broadcast_lookup",
-    "lookup_with_default",
     "validation_anti_join",
     "dedup_anti_join",
     "run_validations",

@@ -1,49 +1,19 @@
-"""Error side-channel convention (SURVEY.md T4, A2, K4).
+"""Error side-channel reporting (SURVEY.md T4, A2, K4).
 
 The reference never aborts on a bad record: each failure is captured as
 (error_type, detail), the record is skipped, and at the end errors are
 grouped by message and exported to CSV (TicketPublisher.php:56-90;
-APIHelper.php:241-261). Here the convention is a pair of DataFrames:
-the ok-rows flow on, the error-rows accumulate via unionByName -- never
-a Python-side try/except per row, so the hot path stays in codegen.
-
-Scale: error rows are a tiny side output; the split is two passes over
-the same cached/filtered plan (Catalyst shares the scan), and the final
-grouping shuffles only (type, detail) strings.
+APIHelper.php:241-261). Here the pipelines in plans/ emit their error
+rows as an (error_type, detail) DataFrame beside the ok rows -- never a
+Python-side try/except per row, so the hot path stays in codegen -- and
+this module groups and exports them. The grouping shuffles only
+(type, detail) strings.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-ERROR_COL = "_error"
-ERROR_SCHEMA = "struct<error_type:string,detail:string>"
-
-
-def with_error(df: DataFrame, condition: Column, error_type: Column | str, detail: Column) -> DataFrame:
-    """Tag rows where ``condition`` holds with an error struct (idempotent:
-    an earlier tag wins, mirroring the reference's first-failure-skips)."""
-    if isinstance(error_type, str):
-        error_type = F.lit(error_type)
-    err = F.struct(error_type.alias("error_type"), detail.alias("detail"))
-    existing = F.col(ERROR_COL) if ERROR_COL in df.columns else F.lit(None).cast(ERROR_SCHEMA)
-    return df.withColumn(ERROR_COL, F.coalesce(existing, F.when(condition, err)))
-
-
-def split_errors(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """-> (ok_rows without the tag column, error_rows as (error_type, detail))."""
-    if ERROR_COL not in df.columns:
-        return df, df.sparkSession.createDataFrame([], "error_type string, detail string")
-    ok = df.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
-    errs = (
-        df.filter(F.col(ERROR_COL).isNotNull())
-        .select(
-            F.col(f"{ERROR_COL}.error_type").alias("error_type"),
-            F.col(f"{ERROR_COL}.detail").alias("detail"),
-        )
-    )
-    return ok, errs
 
 
 def group_error_report(errors: DataFrame) -> DataFrame:

@@ -1,46 +1,15 @@
-"""Lookup-join operators (SURVEY.md J1-J6).
+"""Anti-join operators (SURVEY.md J5, J6).
 
 Every reference lookup is a linear probe of a small cached array; here
 each is a broadcast hash join -- O(n) with no shuffle of the big side.
-Case-insensitivity (P12) is handled by lower() join keys.
+Case-insensitivity (P12) is handled by lower() join keys. The J1-J4
+lookups are written inline where they run (plans/ticket_pipeline.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def broadcast_lookup(
-    facts: DataFrame,
-    dim: DataFrame,
-    fact_key: Column,
-    dim_key: Column,
-    case_insensitive: bool = True,
-    how: str = "left",
-) -> DataFrame:
-    """J2/J3-style broadcast equi-join; keys lowered when case_insensitive."""
-    if case_insensitive:
-        fact_key, dim_key = F.lower(fact_key), F.lower(dim_key)
-    return facts.join(F.broadcast(dim), fact_key == dim_key, how)
-
-
-def lookup_with_default(
-    facts: DataFrame,
-    dim: DataFrame,
-    fact_key: Column,
-    dim_key: Column,
-    value_col: str,
-    default: Column,
-    out_col: str,
-) -> DataFrame:
-    """J1: broadcast lookup; miss -> default value + ``<out_col>_defaulted``
-    marker (the reference's default-mailbox fallback,
-    TicketProcessor.php:382-401)."""
-    joined = broadcast_lookup(facts, dim, fact_key, dim_key)
-    return joined.withColumn(
-        f"{out_col}_defaulted", F.col(value_col).isNull()
-    ).withColumn(out_col, F.coalesce(F.col(value_col), default))
 
 
 def validation_anti_join(

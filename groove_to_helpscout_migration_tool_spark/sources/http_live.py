@@ -1,9 +1,10 @@
-"""Live-socket HTTP transport behind an explicit opt-in flag.
+"""Live-socket HTTP transport.
 
 The engine's API plumbing is cassette-first (sources/http_fixture.py):
 every test and catalog query replays recorded responses, so correctness
-never depends on a network. This module is the ONE live path a real
-migration would flip on -- the analog of the reference's Guzzle client
+never depends on a network. This module is the ONE live path: a real
+migration constructs ``LiveHttpTransport`` and hands it to
+``FixtureHttpClient`` -- the analog of the reference's Guzzle client
 (APIHelper.php:41-105 builds authenticated paginated GETs;
 Publishers/CustomerPublisher.php:38-42 POSTs with bearer auth) --
 implementing the exact transport interface the cassette defines:
@@ -32,25 +33,15 @@ Executor-safety: instances hold only plain values (token string,
 floats) plus an injectable ``sleep`` callable, so cloudpickling into
 mapInPandas / foreachPartition closures is safe; every request builds
 its own urllib opener, so no socket state crosses task boundaries.
-
-Opt-in: construct ``LiveHttpTransport`` directly, or set
-``SPARK_GRAFT_LIVE_HTTP=1`` (token via ``SPARK_GRAFT_API_TOKEN``) and
-call ``make_transport`` -- which returns the cassette transport in
-every other case. The flag exists so no fixture-driven path can start
-doing network I/O by accident.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
 import urllib.error
 import urllib.request
 from typing import Any
-
-LIVE_HTTP_ENV = "SPARK_GRAFT_LIVE_HTTP"
-TOKEN_ENV = "SPARK_GRAFT_API_TOKEN"
 
 Response = tuple[int, str]  # (status_code, body) -- the cassette contract
 
@@ -143,18 +134,3 @@ class LiveHttpTransport:
 
     def post(self, url: str, payload: Any) -> Response:
         return self._request(url, json.dumps(payload).encode("utf-8"))
-
-
-def live_http_enabled() -> bool:
-    return os.environ.get(LIVE_HTTP_ENV, "") == "1"
-
-
-def make_transport(script: dict | None = None, spool_dir: str | None = None):
-    """Cassette transport by default; the live transport ONLY when
-    ``SPARK_GRAFT_LIVE_HTTP=1``. The cassette ``script`` is ignored on
-    the live path (the server is the source of truth)."""
-    if live_http_enabled():
-        return LiveHttpTransport(token=os.environ.get(TOKEN_ENV))
-    from .http_fixture import RecordedTransport
-
-    return RecordedTransport(script or {}, spool_dir=spool_dir)

@@ -69,6 +69,16 @@ def _fetch_page(path: str, page: int, per_page: int) -> Iterator[dict]:
             i += 1
 
 
+def _page_rows(
+    schema: StructType, path: str, page: int, per_page: int
+) -> Iterator[tuple]:
+    """One page as row tuples in ``schema`` order, with its page number."""
+    fields = [f.name for f in schema.fields]
+    for rec in _fetch_page(path, page, per_page):
+        rec = {**rec, "page": page}
+        yield tuple(rec.get(name) for name in fields)
+
+
 class _PagePartition(InputPartition):
     def __init__(self, page: int):
         self.page = page
@@ -122,10 +132,7 @@ class PagedJsonReader(DataSourceReader):
     def read(self, partition: _PagePartition):
         if partition is None:  # empty partition list -> Spark calls read(None)
             return
-        fields = [f.name for f in self.schema.fields]
-        for rec in _fetch_page(self.path, partition.page, self.per_page):
-            rec = {**rec, "page": partition.page}
-            yield tuple(rec.get(name) for name in fields)
+        yield from _page_rows(self.schema, self.path, partition.page, self.per_page)
 
 
 class PagedJsonStreamReader(SimpleDataSourceStreamReader):
@@ -143,12 +150,6 @@ class PagedJsonStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:  # noqa: N802
         return {"page": self.start_page}
 
-    def _rows(self, page: int):
-        fields = [f.name for f in self.schema.fields]
-        for rec in _fetch_page(self.path, page, self.per_page):
-            rec = {**rec, "page": page}
-            yield tuple(rec.get(name) for name in fields)
-
     def read(self, start: dict):
         page = int(start["page"])
         if page > self._total_pages:
@@ -156,11 +157,12 @@ class PagedJsonStreamReader(SimpleDataSourceStreamReader):
         # a page is bounded (per_page records), so materialize: Spark's
         # prefetch cache copies the returned iterator, and a list_iterator
         # (unlike a generator) supports copy
-        return iter(list(self._rows(page))), {"page": page + 1}
+        rows = _page_rows(self.schema, self.path, page, self.per_page)
+        return iter(list(rows)), {"page": page + 1}
 
     def readBetweenOffsets(self, start: dict, end: dict):  # noqa: N802
         for page in range(int(start["page"]), int(end["page"])):
-            yield from self._rows(page)
+            yield from _page_rows(self.schema, self.path, page, self.per_page)
 
 
 class PagedJsonDataSource(DataSource):
