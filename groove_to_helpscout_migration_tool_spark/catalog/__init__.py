@@ -237,6 +237,17 @@ _CHANGED = {
     # round 15: pyds's batch and streaming readers share one page-rows
     # loop (code moved, values identical by construction)
     "ref_s1_python_datasource": 15,
+    # round 16: build_conversations computes each grain (attachments,
+    # messages, tickets) once and both outputs project one ticket-grain
+    # frame; outputs row-identical by construction, plan changed
+    "ref_pipeline_sync_tickets": 16,
+    # round 16: the q11 registration moved back from _q11_value_frame
+    # onto q11_important_stock -- round 14 registered the helper, so the
+    # catalog ran the wrong function under this name
+    "q11_important_stock": 16,
+    # round 16: PipelineMetrics.snapshot builds its table from an Arrow
+    # table (a LocalRelation) instead of a Python row list
+    "ref_k5_observed_metrics": 16,
 }
 
 # Queries measured >= 2s in the full sf0.01 oracle sweep (Spark + DuckDB

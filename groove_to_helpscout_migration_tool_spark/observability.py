@@ -23,10 +23,14 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-METRICS_SCHEMA = (
-    "step string, metric string, value double, observed_at_sec double"
-)
+METRICS_SCHEMA = T.StructType([
+    T.StructField("step", T.StringType()),
+    T.StructField("metric", T.StringType()),
+    T.StructField("value", T.DoubleType()),
+    T.StructField("observed_at_sec", T.DoubleType()),
+])
 
 # Sentinel: the observed action COMPLETED but the metrics row could not be
 # decoded (reflection/serialization drift). Distinct from None (= action
@@ -102,18 +106,27 @@ class PipelineMetrics:
         across steps share one schema (the K5 metrics-table shape).
         Stages whose action has not completed are omitted (bounded wait,
         never an indefinite block), so the table is empty/partial rather
-        than a hang when called early."""
+        than a hang when called early.
+
+        The rows reach the JVM as one Arrow table, which plans as a
+        LocalRelation: no Python-worker job, empty table included."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         elapsed = time.monotonic() - self._t0
-        rows: list[tuple[str, str, float, float]] = []
+        rows: list[dict[str, Any]] = []
         for step, obs in self._observations:
             metrics = self._metrics_or_none(obs)
             if metrics is None or metrics is METRICS_UNAVAILABLE:
                 continue
             for metric, value in metrics.items():
-                rows.append(
-                    (step, metric, float(value if value is not None else 0), elapsed)
-                )
-        return spark.createDataFrame(rows, METRICS_SCHEMA)
+                rows.append({
+                    "step": step, "metric": metric,
+                    "value": float(value if value is not None else 0),
+                    "observed_at_sec": elapsed,
+                })
+        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(METRICS_SCHEMA))
+        return spark.createDataFrame(table, METRICS_SCHEMA)
 
     def log(self, printer: Any = print) -> None:
         """K5 console sink: render SyncCommandBase-style progress lines.

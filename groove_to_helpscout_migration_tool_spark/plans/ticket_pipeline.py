@@ -1,29 +1,44 @@
 """sync-tickets pipeline (SURVEY.md section 3.2; reference:
 app/Console/Commands/SyncTickets.php + Processors/TicketProcessor.php).
 
-The reference's nested per-ticket loops (messages -> attachments ->
-author lookups) become joins + group-backs:
+The reference's nested per-ticket loops (ticket -> messages ->
+attachments -> author lookups) become one pass per grain, each relation
+read once per query:
 
-    tickets --J6 validate--> --J5 dedup anti-join-->
-      --J1 mailbox broadcast join--> --P6/P11/J4 customer resolve-->
-    messages --P8 classify--> --J3 author resolve--> --attachments join-->
-      --P13/P14/P15 attachment handling-->
-    groupBy(ticket) sort_array(collect_list(thread)) --> conversations
+    attachments --P13 sniff, K3 md5 (binary dropped map-side)-->
+      groupBy(att message id): sorted OK structs, failed (url, filename),
+      P14 oversize error rows                                   [att grain]
+    messages --J3/P9 broadcast author dims-->
+      --left join att grain on the attachment-link message id-->
+      thread struct + P15 synthetic notes, or the thread error;
+      attachment error rows                                     [msg grain]
+      --groupBy(ticket_number): raw threads, message errors-->  [ticket grain]
+    tickets --J6 validate (eager)--> --J5 dedup anti-join-->
+      --J1 mailbox, P6/P11/J4 customer broadcast joins--> base
+      --left join ticket grain on number-->
+        conversations: tickets with no conversation error; threads get the
+          P8 note-by-customer override and the ticket status, then
+          array_sort, then the sort-only fields are dropped
+        errors: explode of the conversation error, else of the message
+          errors
 
 Error isolation (T4): a failed THREAD precursor never kills its
 conversation unless the conversation itself is invalid; every failure is
-an error-side-channel row, never an exception.
+an (error_type, detail) struct built where it is found, never an
+exception. Message errors come only from tickets that pass conversation
+validation.
 
-Scale: mailbox/user/customer/conversation dims broadcast; the only
-shuffles are messages->groupBy(ticket_number) and the final
-conversation join, both on the same key so AQE can coalesce. At 100 TB
-attachment bytes are dropped right after hashing (T6) so the group-back
-never carries binaries.
+Scale: mailbox/user/customer/conversation dims broadcast; the
+attachment and ticket aggregates are fact-sized and carry no hint. The
+shuffles are the attachment group, the message group-back and the
+base join, the last two on the ticket number. Attachment bytes are
+hashed before the attachment group (T6), so no shuffle carries
+binaries.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from types import SimpleNamespace
 
@@ -39,6 +54,12 @@ from ..operators import dedup_anti_join, run_validations, validation_anti_join
 
 ATTACH_SIZE_CAP = 10_485_760  # TicketProcessor.php:301
 ATTACH_MSG_RE = r"attachments\?message=(.*)$"
+_ATTACHMENTS_TYPE = "array<struct<fileName:string,mimeType:string,size:bigint,hash:string>>"
+
+
+def _error(error_type: str, detail: Column) -> Column:
+    """One error side-channel row, as the struct both outputs carry."""
+    return F.struct(F.lit(error_type).alias("error_type"), detail.alias("detail"))
 
 
 def _resolve_customer(base: DataFrame, hs_customers: DataFrame, groove_customers: DataFrame) -> DataFrame:
@@ -95,8 +116,6 @@ def build_conversations(
     counts inside the pipeline's own action -- the K5/A4 progress
     surface, zero extra jobs.
     """
-    spark = groove.tickets.sparkSession
-
     def _track(df: DataFrame, step: str) -> DataFrame:
         return metrics.track(df, step) if metrics is not None else df
 
@@ -123,7 +142,7 @@ def build_conversations(
         existing = hs.conversations.select(
             F.col("modifiedAt").alias("e_modified"),
             F.lower(F.col("subject")).alias("e_subject"),
-        ).distinct()
+        )
         tickets = dedup_anti_join(
             tickets, existing,
             [(F.col("created_at"), F.col("e_modified")),
@@ -150,57 +169,67 @@ def build_conversations(
     )
 
     # per-record conversation errors (T4: record skipped, pipeline continues)
+    ticket_tag = F.concat(
+        F.lit(" [ticket "), F.col("number"), F.lit(": "), F.col("summary"), F.lit("]")
+    )
     conv_error = (
         F.when(F.col("links.customer.href").isNull(),
-               F.lit("ValidationException: ticket has no customer link"))
+               _error("ValidationException", F.concat(F.lit("ticket has no customer link"), ticket_tag)))
         .when(F.col("customer_ref").isNull(),
-              F.lit("ValidationException: customer could not be resolved"))
+              _error("ValidationException", F.concat(F.lit("customer could not be resolved"), ticket_tag)))
         .when(F.col("status").isNull(),
-              F.lit("ValidationException: unknown ticket state"))
+              _error("ValidationException", F.concat(F.lit("unknown ticket state"), ticket_tag)))
         .when(F.col("mailbox_id").isNull(),
-              F.lit("ValidationException: no mailbox and no default"))
+              _error("ValidationException", F.concat(F.lit("no mailbox and no default"), ticket_tag)))
     )
     base = base.withColumn("_conv_error", conv_error)
-    conv_errors = base.filter(F.col("_conv_error").isNotNull()).select(
-        F.split(F.col("_conv_error"), ": ")[0].alias("error_type"),
-        F.concat(
-            F.split(F.col("_conv_error"), ": ")[1],
-            F.lit(" [ticket "), F.col("number"), F.lit(": "), F.col("summary"), F.lit("]"),
-        ).alias("detail"),
-    )
-    good = base.filter(F.col("_conv_error").isNull())
 
-    # ---- Phase 4: threads (S5 fan-out already materialized as messages) ----
+    # ---- Phase 4: attachment grain (S6/S13/K3/P13/P14/P15) ----
+    # P13 MIME sniff from magic bytes (JVM-side hex prefix, no UDF) and K3
+    # content hash, both projected BELOW the aggregate: the binary is
+    # consumed map-side and never crosses the shuffle (T6)
+    hex_prefix = F.upper(F.hex(F.substring(F.col("data"), 1, 4)))
+    sniffed = groove.attachments.select(
+        F.col("message_id").alias("att_src_msg_id"),
+        "filename", "size", "url",
+        F.when(F.col("data").isNull(), F.lit(None).cast("string"))
+        .when(hex_prefix.startswith("89504E47"), "image/png")
+        .when(hex_prefix.startswith("FFD8"), "image/jpeg")
+        .when(hex_prefix.startswith("25504446"), "application/pdf")
+        .when(hex_prefix.startswith("47494638"), "image/gif")
+        .otherwise("application/octet-stream").alias("mime"),
+        F.md5(F.col("data")).alias("content_hash"),
+    )
+    ok_atts = F.collect_list(F.when(
+        F.col("content_hash").isNotNull(),
+        F.struct(
+            F.col("filename").alias("fileName"),
+            F.col("mime").alias("mimeType"),
+            F.col("size").alias("size"),
+            F.col("content_hash").alias("hash"),
+        ),
+    ))
+    att_agg = sniffed.groupBy("att_src_msg_id").agg(
+        # NULL, not [], for a message with no OK attachment
+        F.when(F.size(ok_atts) > 0, F.sort_array(ok_atts)).alias("ok_atts"),
+        # P15: failed download (data NULL) -> synthetic note + error row
+        F.collect_list(F.when(
+            F.col("content_hash").isNull(), F.struct("url", "filename")
+        )).alias("failed_atts"),
+        # P14 size warnings (side output, record continues)
+        F.collect_list(F.when(
+            F.col("size") > ATTACH_SIZE_CAP,
+            _error("AttachmentSizeWarning", F.concat(
+                F.col("filename"), F.lit(" is "), F.col("size"),
+                F.lit(" bytes (cap "), F.lit(ATTACH_SIZE_CAP), F.lit(")"),
+            )),
+        )).alias("size_warnings"),
+    )
+
+    # ---- Phase 5: message grain (P8/P9/J3/P17 + the attachment aggregate) ----
     msgs = groove.messages.withColumn(
         "author_kind", link_kind(F.col("links.author.href"))
     ).withColumn("author_id", extract_link_id(F.col("links.author.href")))
-
-    # P8 + override: a note authored by the ticket's customer email is a
-    # customer thread (TicketProcessor.php:76-83); case-insensitive (P12)
-    ticket_cust = good.select(
-        F.col("number").alias("t_number"),
-        F.lower(F.col("cust_link_id")).alias("t_cust_email"),
-        F.col("status").alias("conv_status"),
-    )
-    # ticket_cust is one row per TICKET (a fact, not a dim): no broadcast
-    # hint -- the join key (ticket_number) matches the group-back
-    # partitioning, so a shuffle join co-partitions with the rest of the
-    # pipeline and AQE auto-broadcasts when the side is genuinely small.
-    msgs = msgs.join(
-        ticket_cust, F.col("ticket_number") == F.col("t_number"), "inner"
-    )
-    msgs = msgs.withColumn(
-        "thread_type",
-        F.when(
-            F.col("note")
-            & (F.col("author_kind") == "customer")
-            & (F.lower(F.col("author_id")) == F.col("t_cust_email")),
-            "customer",
-        )
-        .when(F.col("note"), "note")
-        .when(F.col("agent_response"), "message")
-        .otherwise("customer"),
-    )
 
     # P9/J3: author PersonRef. Agent authors resolve agent_id -> email
     # (S8 directory) -> HS user (J3); miss FAILS THE RECORD (thread).
@@ -213,6 +242,10 @@ def build_conversations(
     hs_cust = hs.customers.select(
         F.lower(F.col("email")).alias("hc_email"), F.col("id").alias("hc_id")
     )
+    att_link = F.regexp_extract(F.col("links.attachments.href"), ATTACH_MSG_RE, 1)
+    # att_agg is one row per message-with-attachments (data-sized): no
+    # broadcast hint, AQE broadcasts it when it is genuinely small. An
+    # unmatched link extracts "", which must not match an attachment.
     msgs = (
         msgs.join(F.broadcast(adir), F.col("author_id") == F.col("a_id"), "left")
         .join(F.broadcast(users), F.col("a_email") == F.col("u_email"), "left")
@@ -222,172 +255,133 @@ def build_conversations(
             & (F.lower(F.col("author_id")) == F.col("hc_email")),
             "left",
         )
+        .withColumn("att_msg_id", F.when(att_link != "", att_link))
+        .join(att_agg, F.col("att_msg_id") == F.col("att_src_msg_id"), "left")
     )
-    msgs = msgs.withColumn(
-        "created_by",
+    created_by = F.when(
+        F.col("author_kind") == "agent",
         F.when(
-            F.col("author_kind") == "agent",
-            F.when(
-                F.col("u_id").isNotNull(),
-                F.struct(
-                    F.lit("user").alias("type"),
-                    F.col("u_id").cast("string").alias("id"),
-                    F.col("a_email").alias("email"),
-                ),
-            ),
-        ).when(
-            F.col("author_kind") == "customer",
+            F.col("u_id").isNotNull(),
             F.struct(
-                F.lit("customer").alias("type"),
-                F.col("hc_id").cast("string").alias("id"),
-                F.lower(F.col("author_id")).alias("email"),
+                F.lit("user").alias("type"),
+                F.col("u_id").cast("string").alias("id"),
+                F.col("a_email").alias("email"),
             ),
         ),
+    ).when(
+        F.col("author_kind") == "customer",
+        F.struct(
+            F.lit("customer").alias("type"),
+            F.col("hc_id").cast("string").alias("id"),
+            F.lower(F.col("author_id")).alias("email"),
+        ),
     )
-    # P17 recipient -> toList
+    # thread-level error: agent author with no HS user (J3 miss)
     msgs = msgs.withColumn(
-        "to_list",
+        "_thread_error_detail",
+        F.when(
+            (F.col("author_kind") == "agent") & F.col("u_id").isNull(),
+            F.concat(F.lit("no HelpScout user for author of message "), F.col("message_id")),
+        ).when(
+            F.col("author_kind") == "error",
+            F.concat(F.lit("unparseable author href on message "), F.col("message_id")),
+        ),
+    )
+    thread_ok = F.col("_thread_error_detail").isNull()
+    thread = F.struct(
+        F.lit(0).alias("seq_group"),  # synthetic notes sort after real threads
+        F.col("created_at"),
+        F.col("message_id"),
+        # P8; the note-by-ticket-customer override needs the ticket and is
+        # applied at the ticket grain through cust_note_email
+        F.when(F.col("note"), "note")
+        .when(F.col("agent_response"), "message")
+        .otherwise("customer").alias("type"),
+        F.col("body"),
+        to_iso8601(F.to_timestamp("created_at"), timezone).alias("createdAt"),
+        created_by.alias("createdBy"),
+        # P17 recipient -> toList
         F.when(
             F.col("links.recipient.href").isNotNull(),
             F.array(extract_link_id(F.col("links.recipient.href"))),
-        ),
-    )
-
-    # thread-level error: agent author with no HS user (J3 miss)
-    msgs = msgs.withColumn(
-        "_thread_error",
+        ).alias("toList"),
+        F.col("ok_atts").alias("attachments"),
         F.when(
-            (F.col("author_kind") == "agent") & F.col("u_id").isNull(),
-            F.concat(F.lit("ValidationException: no HelpScout user for author of message "), F.col("message_id")),
-        ).when(
-            F.col("author_kind") == "error",
-            F.concat(F.lit("ValidationException: unparseable author href on message "), F.col("message_id")),
-        ),
+            F.col("note") & (F.col("author_kind") == "customer"),
+            F.lower(F.col("author_id")),
+        ).alias("cust_note_email"),
     )
-    thread_errors = msgs.filter(F.col("_thread_error").isNotNull()).select(
-        F.lit("ValidationException").alias("error_type"),
-        F.regexp_replace(F.col("_thread_error"), "^ValidationException: ", "").alias("detail"),
-    )
-    good_msgs = msgs.filter(F.col("_thread_error").isNull())
-
-    # ---- Phase 5: attachments (S6/S13/K3/P13/P14/P15) ----
-    att_msgs = good_msgs.withColumn(
-        "att_msg_id", F.regexp_extract(F.col("links.attachments.href"), ATTACH_MSG_RE, 1)
-    )
-    atts = groove.attachments.withColumnRenamed("message_id", "att_src_msg_id")
-    joined_atts = att_msgs.filter(F.col("att_msg_id") != "").select(
-        "ticket_number", "message_id", "att_msg_id", "conv_status"
-    ).join(atts, F.col("att_msg_id") == F.col("att_src_msg_id"), "inner")
-
-    # P13 MIME sniff from magic bytes (JVM-side hex prefix, no UDF);
-    # K3 content hash then DROP the binary (T6 memory hygiene)
-    hex_prefix = F.upper(F.hex(F.substring(F.col("data"), 1, 4)))
-    sniffed = joined_atts.withColumn(
-        "mime",
-        F.when(F.col("data").isNull(), F.lit(None).cast("string"))
-        .when(hex_prefix.startswith("89504E47"), "image/png")
-        .when(hex_prefix.startswith("FFD8"), "image/jpeg")
-        .when(hex_prefix.startswith("25504446"), "application/pdf")
-        .when(hex_prefix.startswith("47494638"), "image/gif")
-        .otherwise("application/octet-stream"),
-    ).withColumn("content_hash", F.md5(F.col("data"))).drop("data")
-
-    # P14 size warnings (side output, record continues)
-    size_warnings = sniffed.filter(F.col("size") > ATTACH_SIZE_CAP).select(
-        F.lit("AttachmentSizeWarning").alias("error_type"),
-        F.concat(
-            F.col("filename"), F.lit(" is "), F.col("size"),
-            F.lit(" bytes (cap "), F.lit(ATTACH_SIZE_CAP), F.lit(")"),
-        ).alias("detail"),
-    )
-
-    ok_atts = sniffed.filter(F.col("content_hash").isNotNull()).select(
-        F.col("ticket_number").alias("a_ticket"),
-        F.col("message_id").alias("a_message"),
-        F.struct(
-            F.col("filename").alias("fileName"),
-            F.col("mime").alias("mimeType"),
-            F.col("size").alias("size"),
-            F.col("content_hash").alias("hash"),
-        ).alias("attachment"),
-    )
-    att_by_msg = ok_atts.groupBy("a_ticket", "a_message").agg(
-        F.sort_array(F.collect_list("attachment")).alias("attachments")
-    )
-
-    # P15: failed download (data NULL) -> synthetic note thread linking the
-    # original URL, authored by default_user_id (TicketProcessor.php:313-333)
-    failed = sniffed.filter(F.col("content_hash").isNull())
-    synthetic_notes = failed.select(
-        F.col("ticket_number"),
-        F.lit("synthetic").alias("message_id"),
-        F.lit("note").alias("thread_type"),
-        F.concat(
-            F.lit("Attachment could not be migrated: <a href=\""), F.col("url"),
-            F.lit("\">"), F.col("filename"), F.lit("</a>"),
-        ).alias("body"),
+    # P15: a failed download becomes a note linking the original URL,
+    # authored by default_user_id (TicketProcessor.php:313-333)
+    synthetic_notes = F.transform(F.col("failed_atts"), lambda a: F.struct(
+        F.lit(1).alias("seq_group"),
         F.lit(None).cast("string").alias("created_at"),
-        F.col("conv_status"),
+        F.lit("synthetic").alias("message_id"),
+        F.lit("note").alias("type"),
+        F.concat(
+            F.lit("Attachment could not be migrated: <a href=\""), a["url"],
+            F.lit("\">"), a["filename"], F.lit("</a>"),
+        ).alias("body"),
+        F.lit(None).cast("string").alias("createdAt"),
         F.struct(
             F.lit("user").alias("type"),
             F.lit(str(default_user_id)).alias("id"),
             F.lit(None).cast("string").alias("email"),
-        ).alias("created_by"),
-        F.lit(None).cast("array<string>").alias("to_list"),
-        F.lit(None).cast(
-            "array<struct<fileName:string,mimeType:string,size:bigint,hash:string>>"
-        ).alias("attachments"),
-        F.lit(1).alias("seq_group"),  # synthetic notes sort after real threads
-    )
-    attach_failures = failed.select(
-        F.lit("AttachmentMigrationFailure").alias("error_type"),
-        F.concat(F.lit("failed to download "), F.col("url")).alias("detail"),
-    )
-
-    # ---- Phase 6: group-back (collect_list of thread structs, ordered) ----
-    threads = (
-        # att_by_msg is one row per message-with-attachments (data-sized):
-        # no broadcast hint for the same reason as ticket_cust above.
-        good_msgs.join(
-            att_by_msg,
-            (F.col("ticket_number") == F.col("a_ticket"))
-            & (F.col("message_id") == F.col("a_message")),
-            "left",
-        )
-        .select(
-            "ticket_number", "message_id", "thread_type",
-            F.col("body"), F.col("created_at"), F.col("conv_status"),
-            "created_by", "to_list", "attachments",
-            F.lit(0).alias("seq_group"),
-        )
-        .unionByName(synthetic_notes)
-    )
-    thread_struct = F.struct(
-        F.col("seq_group"),
-        F.col("created_at"),
-        F.col("message_id"),
-        F.col("thread_type").alias("type"),
-        F.col("body"),
-        to_iso8601(F.to_timestamp("created_at"), timezone).alias("createdAt"),
-        F.col("conv_status").alias("status"),
-        F.col("created_by").alias("createdBy"),
-        F.col("to_list").alias("toList"),
-        F.col("attachments"),
-    )
-    per_ticket = (
-        threads.withColumn("t", thread_struct)
-        .groupBy("ticket_number")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list("t")),
-                lambda s: s.dropFields("seq_group", "created_at", "message_id"),
-            ).alias("threads")
-        )
+        ).alias("createdBy"),
+        F.lit(None).cast("array<string>").alias("toList"),
+        F.lit(None).cast(_ATTACHMENTS_TYPE).alias("attachments"),
+        F.lit(None).cast("string").alias("cust_note_email"),
+    ))
+    attach_failures = F.transform(F.col("failed_atts"), lambda a: _error(
+        "AttachmentMigrationFailure", F.concat(F.lit("failed to download "), a["url"])
+    ))
+    # a message with a thread error yields only that error: no thread,
+    # no attachment handling
+    msgs = msgs.select(
+        "ticket_number",
+        F.when(thread_ok, thread).alias("thread"),
+        F.when(thread_ok, synthetic_notes).alias("notes"),
+        F.when(~thread_ok, _error("ValidationException", F.col("_thread_error_detail")))
+        .alias("thread_error"),
+        F.when(thread_ok, F.concat(F.col("size_warnings"), attach_failures)).alias("att_errors"),
     )
 
-    # ---- Phase 7: conversation assembly (HybridConversation lineage) ----
+    # ---- Phase 6: ticket grain (one group-back; collect_list skips NULLs) ----
+    # per_ticket is fact-sized: no broadcast hint, same reason as att_agg
+    per_ticket = msgs.groupBy("ticket_number").agg(
+        F.concat(
+            F.collect_list("thread"), F.flatten(F.collect_list("notes"))
+        ).alias("raw_threads"),
+        F.concat(
+            F.collect_list("thread_error"), F.flatten(F.collect_list("att_errors"))
+        ).alias("msg_errors"),
+    )
+    joined = base.join(per_ticket, F.col("number") == F.col("ticket_number"), "left")
+
+    # ---- Phase 7: both outputs project the one ticket-grain frame ----
+    # P8 override (case-insensitive, P12): a note authored by the ticket's
+    # customer email is a customer thread (TicketProcessor.php:76-83)
+    def _finalize(t: Column) -> Column:
+        return F.struct(
+            t["seq_group"].alias("seq_group"),
+            t["created_at"].alias("created_at"),
+            t["message_id"].alias("message_id"),
+            F.when(t["cust_note_email"] == F.lower(F.col("cust_link_id")), "customer")
+            .otherwise(t["type"]).alias("type"),
+            t["body"].alias("body"),
+            t["createdAt"].alias("createdAt"),
+            F.col("status").alias("status"),
+            t["createdBy"].alias("createdBy"),
+            t["toList"].alias("toList"),
+            t["attachments"].alias("attachments"),
+        )
+
+    threads = F.transform(
+        F.array_sort(F.transform(F.col("raw_threads"), _finalize)),
+        lambda s: s.dropFields("seq_group", "created_at", "message_id"),
+    )
     conversations = (
-        good.join(per_ticket, F.col("number") == F.col("ticket_number"), "left")
+        joined.filter(F.col("_conv_error").isNull())
         .select(
             F.col("number").alias("groove_ticket_number"),  # lineage column
             F.lit("email").alias("type"),
@@ -400,23 +394,25 @@ def build_conversations(
             F.col("created_at_iso").alias("createdAt"),
             F.col("status"),
             F.coalesce(
-                F.col("threads"),
+                threads,
                 F.array().cast(
                     "array<struct<type:string,body:string,createdAt:string,"
                     "status:string,createdBy:struct<type:string,id:string,email:string>,"
-                    "toList:array<string>,"
-                    "attachments:array<struct<fileName:string,mimeType:string,size:bigint,hash:string>>>>"
+                    f"toList:array<string>,attachments:{_ATTACHMENTS_TYPE}>>"
                 ),
             ).alias("threads"),
             F.lit(True).alias("imported"),  # K2: imported=true, prevents spam
         )
     )
 
-    errors = (
-        conv_errors.unionByName(thread_errors)
-        .unionByName(size_warnings)
-        .unionByName(attach_failures)
-    )
+    # a ticket with a conversation error yields that error alone; a valid
+    # ticket yields its messages' errors
+    errors = joined.select(
+        F.explode(
+            F.when(F.col("_conv_error").isNotNull(), F.array("_conv_error"))
+            .otherwise(F.col("msg_errors"))
+        ).alias("e")
+    ).select("e.error_type", "e.detail")
     return _track(conversations, "conversations_out"), _track(errors, "errors_out")
 
 

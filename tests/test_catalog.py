@@ -39,6 +39,17 @@ def test_every_query_has_unique_name():
     assert len(catalog.QUERIES) == len(set(catalog.QUERIES))
 
 
+def test_every_query_registers_its_own_function():
+    """A helper placed between ``@register`` and its query gets
+    registered in the query's place (q11 once timed its value frame)."""
+    mismatched = {
+        name: spec.fn.__name__
+        for name, spec in catalog.QUERIES.items()
+        if spec.fn.__name__ != name
+    }
+    assert mismatched == {}
+
+
 def test_certification_debt_is_retirable_this_round():
     """The bound tools/certage.py promises: every query that NEEDS an
     official row this round (never checked, red, or green older than

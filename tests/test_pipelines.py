@@ -4,6 +4,9 @@ deterministic fixtures -- every quirky reference fallback path
 
 from __future__ import annotations
 
+from collections import Counter
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +15,11 @@ from groove_to_helpscout_migration_tool_spark.plans import (
     transform_customers,
     view_ticket,
 )
-from groove_to_helpscout_migration_tool_spark.operators import ValidationError, group_error_report
+from groove_to_helpscout_migration_tool_spark.operators import (
+    ValidationError,
+    group_error_report,
+    validation_anti_join,
+)
 from groove_to_helpscout_migration_tool_spark.sources import groove_fixtures, helpscout_fixtures
 
 
@@ -204,6 +211,80 @@ class TestTicketPipeline:
         assert by_type["ValidationException"]["n_occurrences"] >= 3
 
 
+def _relation_reads(df) -> Counter:
+    """Parquet relations read by ``df``'s optimized plan, by directory."""
+    reads: Counter = Counter()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            reads[leaf.relation().location().rootPaths().head().getName()] += 1
+    return reads
+
+
+class TestOnePassPerGrain:
+    """Each output is one projection of one ticket-grain frame, so each
+    query reads every fact relation once (no branch re-derives them)."""
+
+    @pytest.fixture(scope="class")
+    def staged(self, spark, groove, hs, tmp_path_factory):
+        root = tmp_path_factory.mktemp("staged")
+
+        def stage(frames, system):
+            out = {}
+            for name, df in vars(frames).items():
+                path = str(root / system / name)
+                df.write.parquet(path)
+                out[name] = spark.read.parquet(path)
+            return SimpleNamespace(**out)
+
+        return stage(groove, "groove"), stage(hs, "hs")
+
+    @pytest.mark.parametrize("check_duplicates", [True, False])
+    def test_each_fact_relation_read_once(self, staged, check_duplicates):
+        groove, hs = staged
+        outputs = build_conversations(groove, hs, check_duplicates=check_duplicates)
+        for df in outputs:
+            reads = _relation_reads(df)
+            assert {n: reads[n] for n in ("tickets", "messages", "attachments")} == {
+                "tickets": 1, "messages": 1, "attachments": 1,
+            }
+
+
+class TestAntiJoinDuplicateKeys:
+    """A duplicated build key cannot change a left_anti result, so the
+    build sides carry no distinct()."""
+
+    def test_validation_misses_unchanged(self, groove_bad, hs):
+        def misses(dim):
+            return sorted(
+                validation_anti_join(
+                    groove_bad.mailboxes, dim, F.col("name"), F.col("name"),
+                    "mailbox_missing", F.col("name"),
+                ).collect()
+            )
+
+        dup = hs.mailboxes.unionByName(hs.mailboxes).unionByName(
+            hs.mailboxes.withColumn("name", F.upper("name"))
+        )
+        assert misses(dup) == misses(hs.mailboxes)
+        assert [r["entity"] for r in misses(dup)] == ["Ghost Box"]
+
+    def test_dedup_result_unchanged(self, groove, hs):
+        def numbers(conversations):
+            h = SimpleNamespace(**{**vars(hs), "conversations": conversations})
+            convs, _ = build_conversations(groove, h)
+            return sorted(r["groove_ticket_number"] for r in convs.collect())
+
+        existing = hs.conversations
+        dup = existing.unionByName(existing).unionByName(
+            existing.withColumn("subject", F.lower("subject"))
+        )
+        kept = numbers(dup)
+        assert kept == numbers(existing)
+        assert 3 not in kept
+
+
 class TestViewTicket:
     def test_point_lookup(self, groove):
         df = view_ticket(groove.tickets, 2)
@@ -293,3 +374,21 @@ class TestPipelineMetrics:
         pm.log(printer=lines.append)
         assert any("[ran_stage] n_rows=5" in ln for ln in lines)
         assert any("pending_stage" in ln and "pending" in ln for ln in lines)
+
+    def test_snapshot_is_a_local_relation(self, spark):
+        """The metrics table reaches the JVM as Arrow data, so building
+        and collecting it runs no Python-worker job, empty or not."""
+        from groove_to_helpscout_migration_tool_spark.observability import PipelineMetrics
+
+        pm = PipelineMetrics()
+        empty = pm.snapshot(spark)
+        ran = pm.track(spark.range(3).toDF("n"), "ran_stage")
+        ran.count()
+        full = pm.snapshot(spark)
+        for df, n in ((empty, 0), (full, 1)):
+            plan = df._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LocalRelation"
+            assert len(df.collect()) == n
+        assert full.schema.simpleString() == (
+            "struct<step:string,metric:string,value:double,observed_at_sec:double>"
+        )
